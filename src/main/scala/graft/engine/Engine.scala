@@ -183,7 +183,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     new LakeTable(spark, lakeRoot, t.fullName, numBuckets)
 
   /** Maintenance pass over every table of an entity: force-compact all
-    * delta buckets (read-optimize) and vacuum unreferenced files.
+    * delta buckets (read-optimize) and vacuum unreferenced files, then
+    * prune old registry versions.
     * `expireTombstonesBelow` drops delete tombstones older than that seq
     * (delete-retention horizon — pass max applied lsn minus the pipeline's
     * out-of-orderness bound); `vacuumGraceMs` guards in-flight writers. */
@@ -200,10 +201,6 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       }
     }
     pruneRegistry(entity)
-    // GC shared multi-table commit dirs no table references any more
-    // (compaction rewrites buckets into per-table base segments, after
-    // which a whole batch's shared dir usually drops out of every live set)
-    LakeTable.vacuumShared(spark, lakeRoot, vacuumGraceMs)
     ()
   }
 
@@ -411,8 +408,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // ONE from_json pass — with a single-table catalog there is exactly
       // one consumer, so the cache (and its materialization barrier) is
       // pure overhead: let the lone merge compute the parse inline (r8).
-      val multiTable = Catalog.fromTree(registry).size > 1 &&
-        sys.env.getOrElse("GRAFT_PARSE_CACHE", "1") != "0"
+      val multiTable = Catalog.fromTree(registry).size > 1
       val parsed = if (multiTable) parsed0.persist() else parsed0
       // materialize the parse cache with ONE clean parallel job before
       // the per-table merge fan-out (r8): the concurrent merge jobs all
@@ -421,8 +417,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // first computes the partition — measured as idle-looking executor
       // time at the 4-executor level. One noop pass fills the cache at
       // full parallelism; the merges then read warm blocks.
-      if (multiTable &&
-        sys.env.getOrElse("GRAFT_PARSE_PREMAT", "1") != "0")
+      if (multiTable)
         parsed.write.format("noop").mode("overwrite").save()
       val (nTables, nDel) =
         try mergeParsed(registry, parsed, commitTag, allDeletes, monotoneSeq)
@@ -473,48 +468,31 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // the applied-delete count comes from the ROOT table's merge lineage
     // (its Observation already counted tombstones) — not a count() job
     var nDel = 0L
-    val rootName = tables.find(_.isRoot).map(_.fullName)
     def readDel(snap: graft.lake.Snapshot): Long =
       snap.lineage.lastOption.filter(_.tag == commitTag)
         .map(_.deleted).getOrElse(0L)
 
-    // Two commit strategies, A/B-measured (BENCH.md r4, steal-controlled
-    // interleaved probe): per-table CONCURRENT merge jobs (default) vs all
-    // tables' deltas in ONE union write job (LakeTable.mergeAll,
-    // `GRAFT_UNION_MERGE=1`). At this table count (7) they are parity at
-    // N and per-table is ~2-4 s/replay faster at 4N (the union's single
-    // exchange serializes behind a stage barrier the concurrent jobs
-    // pipeline through); the union path wins when table count ≫ executor
-    // slots or the driver's job-commit path is the bottleneck (many-table
-    // entities, DFS committers) — kept as a first-class option.
-    val unionMerge = sys.props.getOrElse("graft.union.merge",
-      sys.env.getOrElse("GRAFT_UNION_MERGE", "0")) != "0"
-    if (unionMerge) {
-      val merges = tables.map(t => graft.lake.LakeTable.TableMerge(
-        table(t), frameOf(t), t.keyColumns, rootKeyOf(t),
-        deleteRootKeys = allDeletes, rowSeqCol = rowSeq))
-      val snaps = graft.lake.LakeTable.mergeAll(lakeRoot, merges, commitTag)
-      nDel = rootName.flatMap(snaps.get).map(readDel).getOrElse(0L)
-    } else {
-      // per-table merges run CONCURRENTLY (independent lake tables, like
-      // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
-      // schedules the jobs from separate threads and fills idle cores;
-      // exactly-once holds per table via the shared commit tag
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def mergeOne(t: TableSpec): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.util.Failure
+    // per-table merges run CONCURRENTLY (independent lake tables, like
+    // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
+    // schedules the jobs from separate threads and fills idle cores;
+    // exactly-once holds per table via the shared commit tag
+    val runs = tables.map { t =>
+      Future {
         val snap = table(t).merge(frameOf(t), t.keyColumns, rootKeyOf(t),
           commitTag, deleteRootKeys = allDeletes, rowSeqCol = rowSeq)
         if (t.isRoot) nDel = readDel(snap)
-        ()
       }
-      val parallelMerge = sys.env.getOrElse("GRAFT_PAR_MERGE", "1") != "0"
-      if (parallelMerge)
-        Await.result(Future.sequence(tables.map(t => Future(mergeOne(t)))),
-          Duration.Inf)
-      else tables.foreach(mergeOne)
     }
+    // wait for EVERY merge before surfacing a failure: `Future.sequence`
+    // fails fast, which would return (and let the caller unpersist the
+    // parse cache, or retry the batch) while sibling merges are still
+    // writing and publishing
+    runs.foreach(f => Await.ready(f, Duration.Inf))
+    runs.flatMap(_.value).collectFirst { case Failure(e) => throw e }
     (tables.size, nDel)
   }
 

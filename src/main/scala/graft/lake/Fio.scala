@@ -324,8 +324,7 @@ final class Fio(conf: Configuration) extends Serializable {
     fsOf(p).delete(p, recursive)
 
   /** Relative path from `base` to `child` (".." up-levels like
-    * java.nio's relativize — multi-table shared commit dirs live BESIDE
-    * the table dir). Resolve back with [[resolveRel]]. */
+    * java.nio's relativize). Resolve back with [[resolveRel]]. */
   def relativize(base: HPath, child: HPath): String = {
     val b = qualify(base).toUri.getPath.split("/").filter(_.nonEmpty).toList
     val c = qualify(child).toUri.getPath.split("/").filter(_.nonEmpty).toList

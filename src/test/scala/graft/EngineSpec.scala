@@ -565,6 +565,67 @@ class EngineSpec extends AnyFunSuite {
       .head().getString(0) == "PARTIAL")
   }
 
+  test("torn apply: crash between two tables' commits waits for the siblings; same-tag re-apply recovers") {
+    // the crash-recovery face of the exactly-once contract: the fault seam
+    // throws right before the CHILD table's publish (it never commits)
+    // while the ROOT's publish is delayed. applyEvents must not surface the
+    // failure until the root's merge has finished, and re-applying the
+    // same tag must complete the child without re-applying the root.
+    def doc(id: String, rev: String, v: String) =
+      s"""{"id":"$id","rev":"$rev","v":"$v","items":[{"id":"i-$id","w":"$v"}]}"""
+    val seed = Seq(
+      (1L, "insert", doc("d1", "1", "a")),
+      (2L, "insert", doc("d2", "1", "b"))).toDF("lsn", "op", "doc")
+    val torn = Seq(
+      (3L, "update", doc("d1", "2", "c")),
+      (4L, "insert", doc("d3", "1", "z")),
+      (5L, "delete", """{"id":"d2","rev":"2"}""")).toDF("lsn", "op", "doc")
+    val (e, _) = newEngine()
+    e.applyEvents("tq", seed, "tq:0")
+    val specs = tablesOf(e, "tq")
+    assert(specs.size == 2)
+    val rootLake = e.table(specs.find(_.isRoot).get)
+    val childLake = e.table(specs.find(!_.isRoot).get)
+    val boom = new RuntimeException("injected crash before a table publish")
+    try {
+      graft.lake.LakeTable.beforeTablePublish = name =>
+        if (name == childLake.name) throw boom
+        else if (name == rootLake.name) Thread.sleep(1500)
+      val thrown = intercept[RuntimeException] {
+        e.applyEvents("tq", torn, "tq:1")
+      }
+      assert(thrown eq boom)
+      // the failure surfaced only after the slower root merge published
+      assert(rootLake.snapshot().hasCommit("tq:1"))
+    } finally graft.lake.LakeTable.beforeTablePublish = _ => ()
+    assert(!childLake.snapshot().hasCommit("tq:1"))
+
+    // the consistent cut excludes the torn batch on every table
+    e.registerConsistentViews("tq", prefix = "TORN_")
+    assert(spark.sql("SELECT ID, V FROM TORN_TQ ORDER BY ID").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq ==
+      Seq("d1" -> "a", "d2" -> "b"))
+    assert(spark.sql("SELECT count(*) FROM TORN_TQ_ITEMS")
+      .head().getLong(0) == 2L)
+    e.releaseConsistentViews("tq")
+
+    // recovery: the same tag, the same payload
+    val vRoot = rootLake.currentVersion()
+    e.applyEvents("tq", torn, "tq:1")
+    assert(rootLake.currentVersion() == vRoot, "root re-applied the batch")
+    assert(childLake.snapshot().hasCommit("tq:1"))
+
+    // final state equals a clean apply on a fresh lake
+    val (clean, _) = newEngine()
+    clean.applyEvents("tq", seed, "tq:0")
+    clean.applyEvents("tq", torn, "tq:1")
+    def rows(x: Engine) = tablesOf(x, "tq").map(t => t.fullName ->
+      x.table(t).read().collect().map(_.toString).sorted.toSeq).toMap
+    val want = rows(clean)
+    assert(want("TQ").size == 2) // d1 updated, d3 inserted, d2 deleted
+    assert(rows(e) == want)
+  }
+
   test("maintain: compacts every table, expires old tombstones, vacuums orphans") {
     val (e, root) = newEngine()
     val p = EventGen.Params(nEvents = 400, nRepos = 6, pathsPerRepo = 4,

@@ -53,6 +53,57 @@ class ExprSpec extends AnyFunSuite {
     assert(!plan.contains("ScalaUDF"), plan)
   }
 
+  test("cosine_sim / sig_match_count: two instances compile in ONE codegen'd projection") {
+    // non-nullable children get no null-check block around the kernel
+    // body, so each instance's locals need fresh names; with codegen
+    // fallback off a redeclared local fails the query instead of silently
+    // re-running it interpreted
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    import graft.ops.Similarity
+    def arr(t: DataType) = ArrayType(t, containsNull = false)
+    val schema = StructType(Seq(
+      StructField("a", arr(FloatType), nullable = false),
+      StructField("b", arr(FloatType), nullable = false),
+      StructField("x", arr(LongType), nullable = false),
+      StructField("y", arr(LongType), nullable = false)))
+    val data = Seq(
+      (Array(0.1f, -0.4f, 0.7f), Array(-1f, 2f, -3f),
+        Array(1L, 2L, 3L, 4L), Array(1L, 5L, 3L, 9L)),
+      (Array(3f, 0.25f), Array(3f, 0.5f), Array(7L, 8L), Array(7L, 8L)))
+    // an RDD source: a local relation would be folded by the optimizer
+    // and evaluated interpreted, never reaching codegen
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      data.map { case (a, b, x, y) =>
+        Row(a.toSeq, b.toSeq, x.toSeq, y.toSeq) }, 2), schema)
+    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val q = df.select(
+        Similarity.cosineCols(col("a"), col("b")),
+        Similarity.cosineCols(col("b"), col("a")),
+        expressions.sigMatchCount(col("x"), col("y")),
+        expressions.sigMatchCount(col("y"), col("x")))
+      assert(q.queryExecution.executedPlan
+        .exists(_.isInstanceOf[WholeStageCodegenExec]))
+      val got = q.collect()
+      data.zip(got).foreach { case ((a, b, x, y), r) =>
+        def ad(v: Any) = ArrayData.toArrayData(v)
+        assert(r.getDouble(0) ==
+          Similarity.cosineArrayData(ad(a), ad(b)).doubleValue)
+        assert(r.getDouble(1) ==
+          Similarity.cosineArrayData(ad(b), ad(a)).doubleValue)
+        assert(r.getInt(2) == Dedup.sigMatchCount(ad(x), ad(y)).intValue)
+        assert(r.getInt(3) == Dedup.sigMatchCount(ad(y), ad(x)).intValue)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+      case None    => spark.conf.unset("spark.sql.codegen.fallback")
+    }
+  }
+
   test("null propagates (UnaryExpression null-intolerance)") {
     val df = Seq(Some("x y z"), None).toDF("t")
     val out = df.select(expressions.simhash64(col("t")).as("sh")).collect()
