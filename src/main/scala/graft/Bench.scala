@@ -71,8 +71,8 @@ object Bench {
   /** Calibrated quiet-host reading of [[cpuProbe]] with defaults (8
     * threads × 1.2·10⁹ mixes, min-of-2 median-thread) on this 32-vCPU
     * sandbox: quiet band measured 1.23-1.41 s over 8 consecutive runs.
-    * Re-calibrate with `runMain graft.tools.StealProbe` when the box
-    * changes; override per-run via GRAFT_PROBE_QUIET. */
+    * Re-calibrate from repeated [[cpuProbe]] readings on a quiet box
+    * when the box changes; override per-run via GRAFT_PROBE_QUIET. */
   val ProbeQuietSecs: Double = 1.30
 
   /** local-cluster launches real executor processes and needs SPARK_HOME /
@@ -213,12 +213,12 @@ object Bench {
     // sizing 2 cores / 3g: on this single box the JSON/UTF8-heavy
     // pipeline saturates memory bandwidth around ~8-16 threads (beyond
     // that, executorCpuTime per unit work inflates ~1.5x even across
-    // separate executor JVMs, while pure-ALU jobs keep scaling —
-    // graft.tools.ScaleCheck); a real cluster adds bandwidth with every
-    // node. Below saturation both levels run fully cpu-busy with
-    // run≈cpu, so the measurement reflects the ENGINE's parallel
-    // behavior. AQE off here: per-stage materialization barriers
-    // dominate at miniature batch sizes (it stays ON for the harness).
+    // separate executor JVMs, while pure-ALU jobs keep scaling); a real
+    // cluster adds bandwidth with every node. Below saturation both
+    // levels run fully cpu-busy with run≈cpu, so the measurement
+    // reflects the ENGINE's parallel behavior. AQE off here: per-stage
+    // materialization barriers dominate at miniature batch sizes (it
+    // stays ON for the harness).
     val execCores = sys.env.getOrElse("GRAFT_EXEC_CORES", "2").toInt
     def clusterSession(execs: Int): SparkSession = {
       java.nio.file.Files.createDirectories(
@@ -241,7 +241,7 @@ object Bench {
         // (31.1-31.3 s, r4), but under host contention the finer task
         // granularity lets the scheduler route around stolen cores —
         // measured 32.0-32.3 s vs 35.2-35.8 s highs in the same slow
-        // window (GapProbe mult-2 vs Bench mult-1, r5)
+        // window (mult-2 vs mult-1 replays, r5)
         .config("spark.sql.shuffle.partitions",
           sys.env.get("GRAFT_PART_FIXED").map(_.toInt).getOrElse(
             execs * execCores * sys.env.getOrElse("GRAFT_PART_MULT", "2").toInt))

@@ -113,11 +113,9 @@ object SparkEntry {
     "repo-0001|src/f2.rs|c2",
     "repo-9999|src/f7.py|c1")
 
-  // shared expression: whitespace token count, oracle-identical form
+  // oracle-SQL twin of TextOps.tokenCount (whitespace token count)
   private def tokenCountSql(textCol: String): String =
     s"CAST(length($textCol) - length(replace($textCol, ' ', '')) + 1 AS INTEGER)"
-  private def tokenCountCol(c: Column): Column =
-    (length(c) - length(regexp_replace(c, " ", "")) + 1).cast("int")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- CDC / ingest semantics over the events table ----
@@ -471,7 +469,7 @@ object SparkEntry {
           "quality_score")),
     "text_tokens_by_lang" -> ((s, dir) =>
       t(s, dir, "documents")
-        .withColumn("tc", tokenCountCol(col("text")))
+        .withColumn("tc", TextOps.tokenCount(col("text")))
         .groupBy("lang")
         .agg(sum("tc").as("total_tokens"), count(lit(1)).as("n_docs"),
           round(avg("n_chars"), 2).as("avg_chars"))),

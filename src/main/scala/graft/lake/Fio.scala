@@ -69,12 +69,6 @@ final class Fio(conf: Configuration) extends Serializable {
 
   def exists(p: HPath): Boolean = fsOf(p).exists(p)
 
-  def isDir(p: HPath): Boolean = {
-    val fs = fsOf(p)
-    try fs.getFileStatus(p).isDirectory
-    catch { case _: java.io.FileNotFoundException => false }
-  }
-
   def mkdirs(p: HPath): Unit = { fsOf(p).mkdirs(p); () }
 
   /** Children of `dir` (empty when the directory is absent). */
@@ -323,24 +317,25 @@ final class Fio(conf: Configuration) extends Serializable {
   def delete(p: HPath, recursive: Boolean): Boolean =
     fsOf(p).delete(p, recursive)
 
-  /** Relative path from `base` to `child` (".." up-levels like
-    * java.nio's relativize). Resolve back with [[resolveRel]]. */
+  /** Path of `child` relative to `base`, which must be a proper ancestor
+    * of it (segment paths in a snapshot always point below the table
+    * dir). Resolve back with [[resolveRel]]. */
   def relativize(base: HPath, child: HPath): String = {
     val b = qualify(base).toUri.getPath.split("/").filter(_.nonEmpty).toList
     val c = qualify(child).toUri.getPath.split("/").filter(_.nonEmpty).toList
-    val common = b.zip(c).takeWhile { case (x, y) => x == y }.size
-    (List.fill(b.length - common)("..") ++ c.drop(common)).mkString("/")
+    require(c.length > b.length && c.startsWith(b),
+      s"$child is not under $base")
+    c.drop(b.length).mkString("/")
   }
 
-  /** Resolve a [[relativize]]d path against `base`, normalizing ".."
-    * OURSELVES — a DFS rejects dot-dot components in operation paths. */
+  /** Resolve a [[relativize]]d path against `base`. Every component must
+    * be a plain name: "..", "." and empty components (hence absolute
+    * paths) are refused, so a snapshot can only name files below `base`. */
   def resolveRel(base: HPath, rel: String): HPath =
-    rel.split("/").foldLeft(qualify(base)) { (p, part) =>
-      part match {
-        case "" | "." => p
-        case ".."     => p.getParent
-        case x        => new HPath(p, x)
-      }
+    rel.split("/", -1).foldLeft(qualify(base)) { (p, part) =>
+      require(part.nonEmpty && part != "." && part != "..",
+        s"segment path '$rel' must be relative to $base without '.' or '..'")
+      new HPath(p, part)
     }
 }
 

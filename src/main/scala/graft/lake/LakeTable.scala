@@ -163,9 +163,6 @@ final class LakeTable(val spark: SparkSession, val root: String,
     }
   }
 
-  def snapshotOpt(): Option[Snapshot] =
-    if (exists()) Some(snapshot()) else None
-
   /** All retained snapshot versions, oldest first (vacuum keeps the
     * newest `keepSnapshots`). */
   def snapshotVersions(): Seq[Int] =

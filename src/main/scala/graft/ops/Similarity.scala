@@ -68,7 +68,12 @@ object Similarity {
     * (interpreted eval, boxed doubles), and this kernel runs once per
     * enumerated candidate pair in `Dedup.embeddingPairs` and once per
     * row in every ANN rerank — the interpreted form was the dominant
-    * cost of `dedup_embedding` (guide §4.1). */
+    * cost of `dedup_embedding` (guide §4.1).
+    *
+    * Both sides must be exactly `ARRAY<FLOAT>`: the kernel reads float
+    * elements and fails analysis on any other element type, with no
+    * implicit cast. Cast an `ARRAY<DOUBLE>` (or any other numeric array)
+    * with `.cast("array<float>")` first, accepting the float rounding. */
   def cosineCols(v: Column, q: Column): Column =
     graft.functions.expressions.cosineSim(v, q)
 
@@ -146,9 +151,6 @@ object Similarity {
       .orderBy(col("cosine").desc, col("id"))
       .limit(k)
   }
-
-  /** IVF-ish cell of a signature: `nCells` coarse buckets. */
-  def cellOf(sig: Long, nCells: Int): Int = math.floorMod(mix(sig), nCells.toLong).toInt
 
   /** Write-side ANN layout: materialize each vector's hyperplane signature
     * and store the table PARTITIONED BY signature cell. One-time build;

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   /** Whitespace token count — the oracle-friendly space-count form
-    * (identical semantics in Spark and ANSI SQL). */
+    * (identical semantics in Spark and ANSI SQL). Unaliased: callers name
+    * the column. */
   def tokenCount(text: Column): Column =
-    (length(text) - length(regexp_replace(text, " ", "")) + 1)
-      .cast("int").as("token_count")
+    (length(text) - length(regexp_replace(text, " ", "")) + 1).cast("int")
 
   /** BPE-ish subword count: splits on whitespace AND letter/digit/punct
     * boundaries — a cheap deterministic proxy for tokenizer load. */
@@ -27,7 +27,7 @@ object TextOps {
     * uppercase ratios, and a composite [0,1] score. Deterministic. */
   def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
     val t = col(textCol)
-    val toks = (length(t) - length(regexp_replace(t, " ", "")) + 1).cast("double")
+    val toks = tokenCount(t).cast("double")
     val punct = (length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))).cast("double")
     val upper = (length(t) - length(regexp_replace(t, "[A-Z]", ""))).cast("double")
     val len = length(t).cast("double")

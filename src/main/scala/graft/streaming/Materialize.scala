@@ -108,8 +108,19 @@ object Materialize {
     // fires; a fresh checkpoint gets a fresh id and its batches apply.
     val fio = new graft.lake.Fio(spark.sessionState.newHadoopConf())
     val idFile = new org.apache.hadoop.fs.Path(checkpoint, "graft-mv-id")
+    // a checkpoint with committed batches but no id predates per-stream
+    // tags: its target carries bare mv:<batchId> tags a fresh id cannot
+    // recognise, so a batch in flight at the upgrade would apply twice
+    def hasCommittedBatches =
+      fio.list(new org.apache.hadoop.fs.Path(checkpoint, "commits"))
+        .exists(st => st.isFile && st.getPath.getName.forall(_.isDigit))
     val streamId =
       if (fio.exists(idFile)) fio.readString(idFile).trim
+      else if (hasCommittedBatches) throw new IllegalStateException(
+        s"checkpoint $checkpoint has committed batches but no graft-mv-id: " +
+          "it predates per-stream tags and cannot be resumed without " +
+          "double-applying a batch. Restart the rollup with a fresh " +
+          s"checkpoint and rebuild the target $targetRoot/$targetName.")
       else {
         val id = java.util.UUID.randomUUID().toString.take(12)
         fio.mkdirs(new org.apache.hadoop.fs.Path(checkpoint))

@@ -218,4 +218,33 @@ class MaterializeSpec extends AnyFunSuite {
     assert(last.getLong(last.fieldIndex("upserted")) == 1L,
       s"expected exactly one upserted row, got $last")
   }
+
+  test("a checkpoint with committed batches but no stream id is refused, " +
+      "not resumed under a fresh id") {
+    val srcRoot = SparkTestSession.tmpDir("graft-mvup-src-")
+    val mvRoot = SparkTestSession.tmpDir("graft-mvup-dst-")
+    val ckpt = SparkTestSession.tmpDir("graft-mvup-ckpt-")
+    val src = new LakeTable(spark, srcRoot, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    src.merge(df(("a", "en", 10L), ("b", "de", 4L)), Seq("ID"), "ID", "c1")
+    def start() = Materialize.rollup(spark, srcRoot, "SRC", mvRoot, "MV",
+      "LANG", Map("BYTES" -> col("SZ")), ckpt)
+
+    val q1 = start()
+    q1.processAllAvailable()
+    q1.stop()
+    val mv = new LakeTable(spark, mvRoot, "MV", numBuckets = 4)
+    val before = state(mv)
+    assert(before == Map("en" -> (1L, 10L), "de" -> (1L, 4L)))
+
+    // the shape of a checkpoint written before per-stream tags existed
+    val idFile = new java.io.File(ckpt, "graft-mv-id")
+    assert(idFile.delete())
+    val e = intercept[IllegalStateException](start())
+    assert(e.getMessage.contains("predates per-stream tags"))
+    assert(e.getMessage.contains("fresh checkpoint"))
+    assert(e.getMessage.contains("rebuild the target"))
+    assert(!idFile.exists(), "the refused restart must not mint a new id")
+    assert(state(mv) == before)
+  }
 }

@@ -169,4 +169,23 @@ class FioSpec extends AnyFunSuite {
     assert(fio.exists(log2))
     assert(fio.readLog(log2) == "n1\nn2\nn3\n")
   }
+
+  test("relativize/resolveRel: nested round trip; paths outside the base are refused") {
+    val f = fio
+    val base = new HPath("file:" + SparkTestSession.tmpDir("graft-fio-rel-"), "tbl")
+    val child = new HPath(base, "b=3/v00007/part-0.parquet")
+    val rel = f.relativize(base, child)
+    assert(rel == "b=3/v00007/part-0.parquet")
+    assert(f.resolveRel(base, rel) == f.qualify(child))
+    // a sibling, an ancestor and the base itself are not under the base
+    Seq(new HPath(base.getParent, "_commits/x.parquet"), base.getParent, base)
+      .foreach { p =>
+        intercept[IllegalArgumentException](f.relativize(base, p))
+      }
+    // up-level, dot, empty and absolute components are not normalized away
+    Seq("../_commits/x.parquet", "b=3/../../x", "./x", "b=3//x", "", "/tmp/x")
+      .foreach { r =>
+        intercept[IllegalArgumentException](f.resolveRel(base, r))
+      }
+  }
 }
